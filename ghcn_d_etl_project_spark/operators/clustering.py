@@ -212,11 +212,14 @@ def kmeans_lloyd(
     # partition count. Below the bound the direct collect stays — the
     # pre-reduce costs ~3 extra (AQE) stages per run, measured +0.5s on
     # a 1.0s query at sf0.1, pure overhead when the driver traffic is
-    # kilobytes. Both paths are bit-identical: the d element sums are
-    # one parsed SQL string (the r14 construction rule), and the JVM's
-    # BIGINT sum wraps exactly like np.int64 addition, so int64
-    # associativity makes every iteration's centroids a pure function
+    # kilobytes. Both paths are bit-identical for in-range sums: the d
+    # element sums are one parsed SQL string, and int64 addition is
+    # associative, so every iteration's centroids are a pure function
     # of the assigned-row SET either way.
+    # They differ only on BIGINT overflow: under ANSI mode the JVM sum
+    # on the pre-reduce path throws, while the direct path's np.int64
+    # addition wraps. Overflowing sums are outside this operator's
+    # contract.
     n_parts = base.rdd.getNumPartitions()  # == update_sums' task count
     pre_reduce = k * n_parts > max_collect_rows
     sum_arr = F.expr(

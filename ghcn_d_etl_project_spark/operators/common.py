@@ -51,24 +51,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def maybe_cache(df: DataFrame, min_rows: int = 10_000) -> DataFrame:
-    """Size-gated cache: cache iff the frame exceeds ``min_rows``.
-
-    Ports the reference's "cache if beneficial" rule
-    (``src/utils/spark_utils.py:26-28`` caches when
-    ``df.count() > 10000``) — but the reference pays a FULL count just
-    to make the decision, which at 100 TB costs more than the cache
-    ever saves. Here the probe is ``limit(min_rows + 1).count()``:
-    the limit stops the scan after min_rows+1 rows regardless of input
-    size, so the decision is O(min_rows), not O(data). Frames at or
-    under the gate are cheaper to recompute than to occupy
-    block-manager memory.
-    """
-    if df.limit(min_rows + 1).count() > min_rows:
-        return df.cache()
-    return df
-
-
 def hash_split_bucket(id_col: Column | str, n_buckets: int = 100) -> Column:
     """Deterministic, engine-portable split bucket in [0, n_buckets).
 

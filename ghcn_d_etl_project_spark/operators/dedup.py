@@ -815,8 +815,8 @@ def reference_fingerprints(
     it every batch judgment re-reads and re-hashes the whole corpus
     for the fingerprint equi-join — cheap per row but O(corpus) per
     BATCH, which breaks the "per-batch work scales with the batch"
-    contract the banded near arm already honors (r13; measured in
-    ``scripts/dedup_scaling_experiment.py``)."""
+    contract the banded near arm already honors (the scaling
+    measurement is in the commit history)."""
     fps = (
         ref_df.filter(F.col(id_col).isNotNull() & F.col(text_col).isNotNull())
         .select(
@@ -1363,11 +1363,12 @@ def minhash_banded_pairs_md5(
     # probe (limit(cap+1) over the distinct keys, the
     # ``_matmul_corpus_fits`` recipe): past ``hash_dim_bytes`` of
     # broadcast the operator falls back to hashing per occurrence —
-    # the 100 TB vocabulary never broadcasts.
+    # the 100 TB vocabulary never broadcasts. ``hash_dim_bytes <= 0``
+    # goes straight to the per-occurrence path (no probe job).
     hash_row_bytes = 8 * n_hashes + 24  # n_hashes BIGINTs + avg key
-    cap = max(hash_dim_bytes // hash_row_bytes, 1)
+    cap = hash_dim_bytes // hash_row_bytes
     vocab = sh.select("shingle").distinct()
-    if vocab.limit(cap + 1).count() <= cap:
+    if cap > 0 and vocab.limit(cap + 1).count() <= cap:
         hashes = F.broadcast(
             vocab.select(
                 "shingle",

@@ -34,29 +34,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as a statically-unrolled left-to-right sum.
-
-    Bit-identical to ``dot`` (same IEEE addition order: a1*b1 + a2*b2 +
-    ... applied left to right) but stays inside whole-stage codegen —
-    higher-order fold lambdas run INTERPRETED (~10x slower per element),
-    which dominates when an operator evaluates many dots per row (the
-    LSH bucketing path). Requires the dimension statically."""
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for d in range(2, dim + 1):
-        out = out + F.element_at(a, d) * F.element_at(b, d)
-    return out
-
-
-def _dot_literal(vec: Column, coeffs: list[float]) -> Column:
-    """Unrolled dot of an array column against Python-literal coefficients
-    (constant-folded by Catalyst; no array literal materialized per row)."""
-    out = F.element_at(vec, 1) * F.lit(coeffs[0])
-    for d in range(1, len(coeffs)):
-        out = out + F.element_at(vec, d + 1) * F.lit(coeffs[d])
-    return out
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)

@@ -90,22 +90,6 @@ def rolling_range(
     return out
 
 
-def top_k_per_group(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-    k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Top-k rows per group via row_number — the distributed top-k pattern
-    (a per-partition local sort, no global shuffle of non-winners)."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
-
-
 def rolling_zscore(
     df: DataFrame,
     window: Window,

@@ -91,16 +91,6 @@ def _gate(cfg: CorpusPrepConfig) -> Column:
     )
 
 
-def filtered_redacted(docs: DataFrame, cfg: CorpusPrepConfig) -> DataFrame:
-    """Stages 1+2 fused into a single scan: profile columns, the
-    language/quality/length gates, and PII redaction of survivors —
-    the LOGICAL definition (lazy, unpersisted; semantics pinned by the
-    staged-parity tests). The pipeline itself runs
-    :func:`profiled_persisted` instead — same rows, one less
-    expression evaluation per row."""
-    return _profile(docs).filter(_gate(cfg))
-
-
 def profiled_persisted(
     docs: DataFrame, cfg: CorpusPrepConfig
 ) -> tuple[DataFrame, DataFrame]:

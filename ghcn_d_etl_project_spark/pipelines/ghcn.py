@@ -93,7 +93,8 @@ def bronze_from_dly(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     [1000, 9999] reproduces try_to_date's 4-digit 'yyyyMMdd'
     acceptance, month guard [1, 12] and the day <= last-day compare
     reproduce its calendar validation (old-vs-new pinned equal row-set
-    over the full 913-file corpus in scripts/equiv_r15.py).
+    by ``test_bronze_date_guards_match_try_to_date``; the full-corpus
+    comparison is in the history of commit 5712f7f).
     """
     lines = read_fixed_width(spark, paths, DLY_HEADER, keep_line=True)
     # one parsed SQL string, not 31 py4j substr calls (the r14
@@ -147,9 +148,7 @@ def bronze_from_dly(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     )
 
 
-def silver_from_bronze(
-    bronze: DataFrame, stations: DataFrame, collapse: str = "max"
-) -> DataFrame:
+def silver_from_bronze(bronze: DataFrame, stations: DataFrame) -> DataFrame:
     """Bronze observations → one row per (ID, DATE) with element columns,
     station metadata, and a quality score.
 
@@ -158,9 +157,9 @@ def silver_from_bronze(
     pivot with explicit value list (:79-84) → broadcast-left-join station
     metadata (:116-119) → quality score (:121-142).
 
-    ``collapse`` picks the pivot collapse fn: "max" (deterministic,
-    hash-checkable) or "first" (reference semantics, nondeterministic
-    under duplicate (ID,DATE,ELEMENT) — SURVEY §2.3 R2 note).
+    The pivot collapses duplicate (ID, DATE, ELEMENT) observations with
+    ``max``: deterministic and hash-checkable, where the reference's
+    ``first`` depends on row order (SURVEY §2.3 R2 note).
     """
     f = bronze.filter(F.col("ELEMENT").isin(*ELEMENTS))
     converted = f.withColumn("VALUE", F.col("VALUE").cast("double") / 10.0)
@@ -177,11 +176,10 @@ def silver_from_bronze(
         )
         .otherwise(F.col("VALUE")),
     )
-    collapse_fn = F.max if collapse == "max" else F.first
     pivoted = (
         bounded.groupBy("ID", "DATE", "year", "month", "day")
         .pivot("ELEMENT", list(ELEMENTS))
-        .agg(collapse_fn("VALUE"))
+        .agg(F.max("VALUE"))
     )
     enriched = pivoted.join(F.broadcast(stations), "ID", "left")
     return _with_quality_score(enriched)
@@ -377,17 +375,15 @@ def run_pipeline(
     stations_path: str,
     state: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Full medallion composition. Silver is size-gate cached before the
+    """Full medallion composition. Silver is cache-marked before the
     4-mart fan-out (the reference re-derives it per mart — SURVEY §4
-    caching row; the gate ports ``spark_utils.py:26-28``'s cache-if-
-    beneficial rule with a bounded probe, see
-    ``operators/common.py:maybe_cache``).
+    caching row). The cache is lazy: no Spark job runs here, the first
+    action over silver fills it and the marts read it after that. The
+    caller owns ``unpersist()`` on the returned silver frame.
     """
-    from ghcn_d_etl_project_spark.operators.common import maybe_cache
-
     bronze = bronze_from_dly(spark, dly_paths)
     stations = read_stations(spark, stations_path, state=state)
-    silver = maybe_cache(silver_from_bronze(bronze, stations), min_rows=1000)
+    silver = silver_from_bronze(bronze, stations).cache()
     return {
         "bronze": bronze,
         "silver": silver,

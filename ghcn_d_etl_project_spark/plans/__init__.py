@@ -2,7 +2,8 @@
 
 Each module covers one operator family from SURVEY.md §2; the registry in
 ``registry.py`` is the single source of truth consumed by
-``__spark_entry__.py``, the pytest oracle-parity suite, and ``bench.py``.
+``__spark_entry__.py``, the pytest oracle-parity suite, and the perfbench
+``olap_queries`` workload.
 """
 
 # Import order IS registry order, and the round driver evaluates entries in

@@ -32,7 +32,7 @@ class Query:
     fn: QueryFn
     oracle: str | None = None
     tags: frozenset[str] = field(default_factory=frozenset)
-    bench: bool = False  # include in bench.py headline set
+    bench: bool = False  # perfbench `olap_queries` set and plan-snapshot selection
     late: bool = False  # sort after the core oracle block (see all_queries)
     doc: str = ""
 

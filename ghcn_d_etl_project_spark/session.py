@@ -2,7 +2,8 @@
 
 Reference analog: ``src/utils/spark_utils.py`` (session config / cache /
 repartition helpers) — re-expressed as a single tuned factory. Settings are
-chosen for correctness-vs-oracle (UTC session timezone, ANSI off) and for
+chosen for correctness-vs-oracle (UTC session timezone; ANSI mode stays at
+Spark 4's default, on, so invalid casts and arithmetic overflow throw) and for
 scale-readiness (AQE, skew-join handling, partition coalescing); the
 shuffle-partition count defaults to the local core count but is the one knob
 a cluster deployment should raise to ~2-3x total cores.

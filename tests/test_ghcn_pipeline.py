@@ -317,23 +317,25 @@ def test_normal_temp_row_midpoint_semantics(spark):
     assert r2.climate_zone == "Temperate"  # keyed off 19, not 24
 
 
-def test_maybe_cache_size_gate(spark):
-    """maybe_cache caches only above the row gate, and the probe is
-    bounded (limit+count), not a full count of the input."""
-    from ghcn_d_etl_project_spark.operators.common import maybe_cache
-
-    small = spark.range(10).toDF("id")
-    big = spark.range(5000).toDF("id")
-    got_small = maybe_cache(small, min_rows=100)
-    got_big = maybe_cache(big, min_rows=100)
+def test_run_pipeline_caches_silver_without_a_job(spark, fixture_paths):
+    """run_pipeline only composes lazy frames: it marks silver for the
+    cache (filled by the first action over it) and runs no Spark job of
+    its own, so no size probe scans the raw text before the writes."""
+    dly, stations_path = fixture_paths
+    sc = spark.sparkContext
+    group = "run_pipeline_no_job"
+    sc.setJobGroup(group, "run_pipeline must not run a Spark job")
     try:
-        assert not (
-            got_small.storageLevel.useMemory or got_small.storageLevel.useDisk
-        )
-        assert got_big.storageLevel.useMemory or got_big.storageLevel.useDisk
-        assert got_big.count() == 5000
+        p = run_pipeline(spark, dly, stations_path, state="GA")
     finally:
-        got_big.unpersist()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        level = p["silver"].storageLevel
+        assert level.useMemory or level.useDisk
+    finally:
+        p["silver"].unpersist()
 
 
 def test_ml_features_dense_windows_see_full_calendar(spark):

@@ -42,6 +42,22 @@ def test_banded_finds_planted_near_dups_and_exact_jaccard(spark):
     assert r["size1"] == 38 and r["size2"] == 38
     assert r["n_inter"] == 35
     assert abs(r["jaccard"] - 35 / 41) < 1e-6
+    # hash_dim_bytes=0 disables the broadcast hash-dimension path: no
+    # vocabulary probe job, no per-shingle hash table in the plan, and
+    # the same pairs as the default path
+    sc = spark.sparkContext
+    sc.setJobGroup("md5_no_hash_dim", "hash_dim_bytes=0 runs no probe")
+    try:
+        off = minhash_banded_pairs_md5(
+            df, "doc_id", "text", threshold=0.5, hash_dim_bytes=0
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("md5_no_hash_dim")) == []
+    assert "__h0" in out._jdf.queryExecution().executedPlan().toString()
+    assert "__h0" not in off._jdf.queryExecution().executedPlan().toString()
+    assert off.collect() == rows
 
 
 def test_banded_identical_docs_jaccard_one(spark):
