@@ -32,7 +32,6 @@ from ghcn_d_etl_project_spark.operators.similarity import (  # noqa: F401
     sign_lsh_bucket,
 )
 from ghcn_d_etl_project_spark.operators.textops import (  # noqa: F401
-    bpe_ish_token_count,
     char_shingles,
     chunk_spans,
     fingerprint,
@@ -58,7 +57,6 @@ from ghcn_d_etl_project_spark.plans._util import (  # noqa: F401
 __all__ = [
     "as_date_str",
     "bootstrap_uniform",
-    "bpe_ish_token_count",
     "char_shingles",
     "chunk_spans",
     "cosine",

@@ -77,7 +77,7 @@ def kmeans_lloyd(
     and ``unpersist()`` it once the returned frame has been consumed.
 
     ``max_collect_rows`` bounds the per-iteration driver collect: when
-    the worst case (k rows per input partition of numpy partial sums)
+    the worst case (k rows per Arrow batch of numpy partial sums)
     exceeds it, a k-row JVM ``groupBy("cluster")`` pre-reduce is
     inserted so the collect is O(k x d) regardless of partition count
     (VERDICT r14 #2); below the bound the partials are collected
@@ -202,26 +202,35 @@ def kmeans_lloyd(
 
     # The per-iteration reduce is TWO-LEVEL WHEN IT NEEDS TO BE (r15,
     # VERDICT r14 #2): the numpy partial sums are <= k rows per Arrow
-    # batch, i.e. up to k x partitions rows of d+2 numbers at the
-    # driver — trivial at local[32] (k=8 x 32 rows), gigabytes per
-    # iteration at a 100 TB layout's 10^5-10^6 partitions. When the
-    # worst-case partial-row count exceeds ``max_collect_rows``, one
-    # small JVM groupBy("cluster") pre-reduces: map-side partial
-    # aggregation collapses every partition to <= k rows before ONE
-    # k-row exchange, so the collect is O(k x d) regardless of
-    # partition count. Below the bound the direct collect stays — the
-    # pre-reduce costs ~3 extra (AQE) stages per run, measured +0.5s on
-    # a 1.0s query at sf0.1, pure overhead when the driver traffic is
-    # kilobytes. Both paths are bit-identical for in-range sums: the d
-    # element sums are one parsed SQL string, and int64 addition is
-    # associative, so every iteration's centroids are a pure function
-    # of the assigned-row SET either way.
+    # batch, and a partition of r rows arrives in ceil(r / B) batches
+    # of B = arrow.maxRecordsPerBatch rows, so the driver sees up to
+    # k x (partitions + rows // B) rows of d+2 numbers — trivial at
+    # local[32] (k=8 x 32 rows), gigabytes per iteration at a 100 TB
+    # layout's 10^5-10^6 partitions or a few huge ones. The row count
+    # is read from the persisted base, which the seed selection above
+    # has already filled. When that worst case exceeds
+    # ``max_collect_rows``, one small JVM groupBy("cluster")
+    # pre-reduces: map-side partial aggregation collapses every
+    # partition to <= k rows before ONE k-row exchange, so the collect
+    # is O(k x d) regardless of partition count. Below the bound the
+    # direct collect stays — the pre-reduce costs ~3 extra (AQE) stages
+    # per run, measured +0.5s on a 1.0s query at sf0.1, pure overhead
+    # when the driver traffic is kilobytes. Both paths are
+    # bit-identical for in-range sums: the d element sums are one
+    # parsed SQL string, and int64 addition is associative, so every
+    # iteration's centroids are a pure function of the assigned-row SET
+    # either way.
     # They differ only on BIGINT overflow: under ANSI mode the JVM sum
     # on the pre-reduce path throws, while the direct path's np.int64
     # addition wraps. Overflowing sums are outside this operator's
     # contract.
-    n_parts = base.rdd.getNumPartitions()  # == update_sums' task count
-    pre_reduce = k * n_parts > max_collect_rows
+    n_batches = base.rdd.getNumPartitions()  # == update_sums' task count
+    per_batch = int(
+        df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    if per_batch > 0:  # <= 0 means one batch per partition
+        n_batches += base.count() // per_batch
+    pre_reduce = k * n_batches > max_collect_rows
     sum_arr = F.expr(
         "array(" + ", ".join(f"sum(s[{i}])" for i in range(dim)) + ")"
     )

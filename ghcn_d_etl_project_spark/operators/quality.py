@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def quality_score(
@@ -286,26 +285,6 @@ def approx_quantile_certificate(
         _ok("__r1lo", "__r1hi", 0.25).alias("q1_in_band"),
         _ok("__r3lo", "__r3hi", 0.75).alias("q3_in_band"),
     )
-
-
-def schema_contract_report(
-    df: DataFrame, expected: T.StructType
-) -> tuple[bool, list[str]]:
-    """Schema contract check (Q3): subset semantics as in the reference —
-    every expected field must exist with the exact dataType; extra actual
-    columns are allowed (``data_validator.py:61-84``). Driver-side
-    metadata-only check (no job runs)."""
-    actual = {f.name: f.dataType for f in df.schema.fields}
-    problems: list[str] = []
-    for field in expected.fields:
-        if field.name not in actual:
-            problems.append(f"missing column: {field.name}")
-        elif actual[field.name] != field.dataType:
-            problems.append(
-                f"type mismatch {field.name}: expected {field.dataType}, "
-                f"got {actual[field.name]}"
-            )
-    return (not problems, problems)
 
 
 def recommendations(

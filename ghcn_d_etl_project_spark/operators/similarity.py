@@ -5,12 +5,12 @@ cosine top-k as the exact baseline, random-hyperplane (sign) LSH
 bucketing as the approximate scale path, and cosine near-dup pairs.
 
 Dot products use ``F.zip_with`` + ``F.aggregate`` — a JVM-side sequential
-fold, deterministic and UDF-free. The brute-force path is a broadcast
-cross join (quadratic — fine for a query set vs corpus, or bounded
-corpora); the LSH path buckets vectors by sign-pattern so only same-bucket
-pairs are scored, which is the linear-ish construction for 100 TB-scale
-near-dup mining. At cluster scale the corpus side stays partitioned while
-the (small) query side broadcasts.
+fold, deterministic and UDF-free. The exact operators (``cosine_topk``,
+``neardup_pairs``, ``hard_negative_topk``) share one dispatch: a
+broadcast-GEMM kernel when the corpus fits their byte budget, else a
+self pair join (quadratic — fine for bounded corpora). The LSH path
+buckets vectors by sign-pattern so only same-bucket pairs are scored,
+which is the linear-ish construction for 100 TB-scale near-dup mining.
 """
 
 from __future__ import annotations
@@ -51,9 +51,9 @@ def _as_double(col: str) -> Column:
 def _scoreable(df, id_col: str, vec_col: str):
     """Drop rows no cosine is defined for — NULL vectors and zero-norm
     vectors (0/0 is NaN, and NaN ordering DISAGREES between numpy, the
-    JVM, and SQL engines: the one place the two strategies could
-    diverge). Filtering is the contract, not a fallback; documented on
-    both public operators."""
+    JVM, and SQL engines: the one place the two arms could diverge).
+    Filtering is the contract, not a fallback; documented on every
+    exact operator."""
     v = _as_double(vec_col)
     return df.filter(
         F.col(id_col).isNotNull()
@@ -63,263 +63,67 @@ def _scoreable(df, id_col: str, vec_col: str):
 
 
 def _matmul_corpus_fits(
-    df: DataFrame,
-    vec_col: str,
-    broadcast_rows: int,
-    broadcast_bytes: int,
-) -> tuple[bool, int]:
+    df: DataFrame, vec_col: str, broadcast_bytes: int
+) -> bool:
     """Bounded probe: does the (already _scoreable-filtered) corpus fit
-    the matmul arm's driver collect?
+    the GEMM kernel's driver collect?
 
-    The row cap alone is NOT a safety bound — 2M rows at 1024-dim
-    float64 is ~16 GB of driver heap. The real constraint is BYTES:
-    ``rows x dim x 8`` against ``broadcast_bytes``. One row is sampled
-    for the dimensionality (vectors are fixed-width by contract), the
-    byte budget converts to an effective row cap, and a
-    ``limit(cap + 1)`` count decides — never a full count, so the probe
-    cost is O(cap) regardless of corpus size. Returns
-    ``(fits, effective_row_cap)``; an empty corpus trivially fits."""
+    The constraint is BYTES, ``rows x dim x 8`` against
+    ``broadcast_bytes`` (2M rows at 1024-dim float64 is ~16 GB of
+    driver heap). One row is sampled for the dimensionality (vectors
+    are fixed-width by contract), the budget converts to a row cap, and
+    a ``limit(cap + 1)`` count decides — never a full count, so the
+    probe cost is O(cap) regardless of corpus size. An empty corpus
+    takes the pair join: there is nothing to join, and no matrix to
+    shape."""
     first = df.select(F.size(_as_double(vec_col)).alias("d")).limit(1).collect()
     if not first:
-        return True, broadcast_rows  # empty corpus: nothing to collect
-    dim = max(int(first[0]["d"]), 1)
-    cap = min(broadcast_rows, broadcast_bytes // (dim * 8))
-    if cap < 1:
-        return False, cap
-    n_bounded = df.limit(cap + 1).count()
-    return n_bounded <= cap, cap
+        return False
+    cap = broadcast_bytes // (max(int(first[0]["d"]), 1) * 8)
+    return cap >= 1 and df.limit(cap + 1).count() <= cap
 
 
-def cosine_topk(
+def _query_keys(id_col: str, label_col: str | None) -> list[Column]:
+    """The query side's key columns in both arms: ``qid[, q_label]``."""
+    keys = [F.col(id_col).alias("qid")]
+    if label_col is not None:
+        keys.append(F.col(label_col).alias("q_label"))
+    return keys
+
+
+def _gemm_kernel(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    round_digits: int = 6,
-    strategy: str = "auto",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 512 * 1024 * 1024,
-) -> DataFrame:
-    """Exact all-pairs cosine top-k neighbors per vector (self excluded).
-    Ties broken by neighbor id for determinism.
-
-    Two physical strategies, same logical result:
-
-    * ``"pairs"`` — crossJoin + JVM fold dot + window rank. UDF-free and
-      fully streaming, but it materializes N^2 score ROWS and shuffles
-      them through the per-qid window: the sort, not the arithmetic,
-      dominates. Kept as the no-driver-state fallback.
-    * ``"matmul"`` — the corpus (ids, vectors, norms) is collected ONCE
-      into a dense float64 matrix and broadcast; ``mapInPandas`` over the
-      query partitions computes one BLAS GEMM per Arrow batch and selects
-      the (tie-aware) top-k INSIDE the batch, so only N x k rows ever
-      exist as rows. Work per query partition is independent — on a
-      1000-executor cluster each executor scores its query slice against
-      the shared corpus block with zero shuffle. Bounded by BYTES
-      (``broadcast_bytes``, default 512 MB: ``rows x dim x 8`` must fit
-      driver + executor memory — a row cap alone reads safe at 2M rows
-      yet is ~16 GB at 1024-dim) with ``broadcast_rows`` kept as a
-      secondary cap; beyond either, the honest scale path is IVF
-      (``operators/ivf.py``) or sign-LSH — the brute-force N^2 itself
-      is what stopped scaling, not this broadcast.
-    * ``"auto"`` — matmul when a bounded probe (one sampled row for the
-      vector dim, then ``limit(cap+1).count()``) shows the corpus fits,
-      else pairs.
-
-    Contract: rows with NULL ids, NULL vectors, or zero-norm vectors
-    are EXCLUDED (no cosine is defined for them; 0/0-NaN ordering is
-    the one place the two strategies could diverge).
-
-    Parity note: GEMM sums partial products in SIMD/blocked order while
-    the fold sums left-to-right; both land within ~1 ulp of each other,
-    absorbed by ``round_digits`` rounding exactly as the DuckDB oracle's
-    own summation order already is (pinned by an exact matmul==pairs
-    equality test at two SFs).
-    """
-    if strategy not in ("auto", "pairs", "matmul"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    df = _scoreable(df, id_col, vec_col)
-    if strategy != "pairs":
-        fits, cap = _matmul_corpus_fits(
-            df, vec_col, broadcast_rows, broadcast_bytes
-        )
-        if fits:
-            return _cosine_topk_matmul(df, id_col, vec_col, k, round_digits)
-        if strategy == "matmul":
-            raise ValueError(
-                f"corpus exceeds the matmul broadcast budget (effective "
-                f"row cap {cap} from broadcast_bytes={broadcast_bytes}, "
-                f"broadcast_rows={broadcast_rows}); use strategy='pairs' "
-                "or the IVF/LSH approximate paths"
-            )
-    base = ensure_parallelism(df).select(
-        F.col(id_col).alias("qid"),
-        _as_double(vec_col).alias("qvec"),
-    ).withColumn("qnorm", norm(F.col("qvec")))
-    other = base.select(
-        F.col("qid").alias("nid"),
-        F.col("qvec").alias("nvec"),
-        F.col("qnorm").alias("nnorm"),
-    )
-    pairs = base.crossJoin(other).filter(F.col("qid") != F.col("nid"))
-    scored = pairs.select(
-        "qid",
-        "nid",
-        F.round(
-            dot(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
-            round_digits,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _cosine_topk_matmul(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
+    label_col: str | None,
     round_digits: int,
+    schema: str,
+    select,
 ) -> DataFrame:
-    """Block-matmul arm of :func:`cosine_topk` (see its docstring).
-
-    Per Arrow batch of B query vectors: ``S = round((Q @ X.T) /
-    outer(|q|, |x|), digits)``, self masked out, then per row every
-    neighbor with ``cos >= kth-largest cos`` is kept (ties INCLUDED so
-    the id tiebreak is decided on the full tie group, identical to the
-    window's (cos desc, nid asc) order), sorted, sliced to k.
+    """Broadcast-GEMM arm of the exact operators: the corpus (ids,
+    optional labels, vectors, norms) is collected ONCE into a dense
+    float64 matrix and broadcast; ``mapInPandas`` over the query
+    partitions computes, per Arrow batch of B queries, ``S =
+    round((Q @ M.T) / outer(|q|, |m|), round_digits)`` and hands it to
+    ``select(S, pdf, nids, labs)``, which returns the batch's output
+    columns. Only the selected rows ever exist as rows, and each query
+    partition is scored independently — zero shuffle. ``schema`` names
+    the output with ``{id}``/``{label}`` standing for the input types.
     """
     import numpy as np
     import pandas as pd
 
-    corpus = df.select(F.col(id_col), _as_double(vec_col)).collect()
-    ids = [r[0] for r in corpus]
-    X = np.asarray([r[1] for r in corpus], dtype=np.float64)
-    xnorm = np.sqrt((X * X).sum(axis=1))
-    nid_arr = np.asarray(ids)
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast((nid_arr, X, xnorm))
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"qid {id_type}, nid {id_type}, cos_sim double, rank long"
-
-    def score_block(batches):
-        nids, M, mnorm = b.value
-        n = len(nids)
-        kk = min(k, n - 1) if n > 1 else 0
-        for pdf in batches:
-            if not len(pdf) or kk == 0:
-                continue
-            Q = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["qvec"]]
-            )
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            S = np.round((Q @ M.T) / np.outer(qn, mnorm), round_digits)
-            qids = pdf["qid"].to_numpy()
-            out_q, out_n, out_c, out_r = [], [], [], []
-            for i in range(len(pdf)):
-                row = S[i].copy()
-                row[nids == qids[i]] = -np.inf
-                kth = np.partition(row, -kk)[-kk]
-                cand = np.nonzero(row >= kth)[0]
-                # (cos desc, nid asc): lexsort's LAST key is primary
-                order = cand[np.lexsort((nids[cand], -row[cand]))][:kk]
-                out_q.extend([qids[i]] * len(order))
-                out_n.extend(nids[order])
-                out_c.extend(row[order])
-                out_r.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {"qid": out_q, "nid": out_n, "cos_sim": out_c, "rank": out_r}
-            )
-
-    queries = ensure_parallelism(df).select(
-        F.col(id_col).alias("qid"), _as_double(vec_col).alias("qvec")
-    )
-    return queries.mapInPandas(score_block, schema=out_schema)
-
-
-def neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.9,
-    round_digits: int = 6,
-    strategy: str = "auto",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 512 * 1024 * 1024,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id1 < id2, cos >= t).
-    Norms precomputed per vector (see cosine_topk).
-
-    Same two physical strategies as :func:`cosine_topk` — ``"matmul"``
-    (broadcast corpus, one GEMM per Arrow batch of queries, each
-    unordered pair emitted by its SMALLER id so nothing duplicates;
-    only the >= t survivors ever exist as rows) and ``"pairs"`` (the
-    crossJoin fallback); ``"auto"`` probes the broadcast bound —
-    BYTES-first (``broadcast_bytes``, see :func:`cosine_topk`), rows
-    as a secondary cap. Same NULL/zero-norm exclusion contract as
-    :func:`cosine_topk`."""
-    if strategy not in ("auto", "pairs", "matmul"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    df = _scoreable(df, id_col, vec_col)
-    if strategy != "pairs":
-        fits, cap = _matmul_corpus_fits(
-            df, vec_col, broadcast_rows, broadcast_bytes
-        )
-        if fits:
-            return _neardup_matmul(df, id_col, vec_col, threshold, round_digits)
-        if strategy == "matmul":
-            raise ValueError(
-                f"corpus exceeds the matmul broadcast budget (effective "
-                f"row cap {cap} from broadcast_bytes={broadcast_bytes}, "
-                f"broadcast_rows={broadcast_rows}); use strategy='pairs' "
-                "or the LSH bucketed path"
-            )
-    a = ensure_parallelism(df).select(
-        F.col(id_col).alias("id1"), _as_double(vec_col).alias("v1")
-    ).withColumn("n1", norm(F.col("v1")))
-    b = a.select(
-        F.col("id1").alias("id2"), F.col("v1").alias("v2"), F.col("n1").alias("n2")
-    )
-    pairs = a.crossJoin(b).filter(F.col("id1") < F.col("id2"))
-    return (
-        pairs.select(
-            "id1",
-            "id2",
-            F.round(
-                dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
-                round_digits,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def _neardup_matmul(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    round_digits: int,
-) -> DataFrame:
-    """Block-matmul arm of :func:`neardup_pairs` (see its docstring)."""
-    import numpy as np
-    import pandas as pd
-
-    corpus = df.select(F.col(id_col), _as_double(vec_col)).collect()
+    side = _query_keys(id_col, label_col)
+    corpus = df.select(*side, _as_double(vec_col)).collect()
     nid_arr = np.asarray([r[0] for r in corpus])
-    X = np.asarray([r[1] for r in corpus], dtype=np.float64)
-    xnorm = np.sqrt((X * X).sum(axis=1))
-    b = df.sparkSession.sparkContext.broadcast((nid_arr, X, xnorm))
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"id1 {id_type}, id2 {id_type}, cos_sim double"
+    lab_arr = np.asarray([r[1] for r in corpus]) if label_col else None
+    X = np.asarray([r[-1] for r in corpus], dtype=np.float64)
+    b = df.sparkSession.sparkContext.broadcast(
+        (nid_arr, lab_arr, X, np.sqrt((X * X).sum(axis=1)))
+    )
 
     def score_block(batches):
-        nids, M, mnorm = b.value
+        nids, labs, M, mnorm = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -328,20 +132,195 @@ def _neardup_matmul(
             )
             qn = np.sqrt((Q * Q).sum(axis=1))
             S = np.round((Q @ M.T) / np.outer(qn, mnorm), round_digits)
-            qids = pdf["qid"].to_numpy()
-            out1, out2, outc = [], [], []
-            for i in range(len(pdf)):
-                keep = np.nonzero((S[i] >= threshold) & (nids > qids[i]))[0]
-                keep = keep[np.argsort(nids[keep])]
-                out1.extend([qids[i]] * len(keep))
-                out2.extend(nids[keep])
-                outc.extend(S[i][keep])
-            yield pd.DataFrame({"id1": out1, "id2": out2, "cos_sim": outc})
+            yield pd.DataFrame(select(S, pdf, nids, labs))
 
-    queries = ensure_parallelism(df).select(
-        F.col(id_col).alias("qid"), _as_double(vec_col).alias("qvec")
+    types = {
+        "id": df.schema[id_col].dataType.simpleString(),
+        "label": label_col and df.schema[label_col].dataType.simpleString(),
+    }
+    queries = ensure_parallelism(df).select(*side, _as_double(vec_col).alias("qvec"))
+    return queries.mapInPandas(score_block, schema=schema.format(**types))
+
+
+def _pair_join(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None,
+    round_digits: int,
+    cond: Column,
+) -> DataFrame:
+    """Pair-join arm of the exact operators: a self join on the
+    non-equi ``cond`` scored by the JVM fold dot over precomputed
+    norms. UDF-free and needs no driver state, but every candidate pair
+    exists as a ROW (a broadcast nested-loop or cartesian join). Output
+    ``(qid, [q_label,] nid, [n_label,] cos_sim)``."""
+    q = ensure_parallelism(df).select(
+        *_query_keys(id_col, label_col), _as_double(vec_col).alias("qvec")
+    ).withColumn("qnorm", norm(F.col("qvec")))
+    n = q.select(*[F.col(c).alias("n" + c[1:]) for c in q.columns])
+    keys = q.columns[:-2]
+    return q.join(n, cond).select(
+        *keys,
+        *["n" + c[1:] for c in keys],
+        F.round(
+            dot(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
+            round_digits,
+        ).alias("cos_sim"),
     )
-    return queries.mapInPandas(score_block, schema=out_schema)
+
+
+def _exact_cosine(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None,
+    round_digits: int,
+    broadcast_bytes: int,
+    schema: str,
+    select,
+    cond: Column,
+    finish,
+) -> DataFrame:
+    """The one dispatch of the exact cosine operators: the GEMM kernel
+    when the bounded probe shows the corpus fits ``broadcast_bytes``,
+    else ``finish`` over the pair join. Both arms give the same rows
+    and rounded scores: GEMM sums partial products in SIMD/blocked
+    order while the fold sums left-to-right, and the ~1 ulp between
+    them is absorbed by ``round_digits`` exactly as the DuckDB oracle's
+    own summation order already is (pinned by exact equality tests)."""
+    if _matmul_corpus_fits(df, vec_col, broadcast_bytes):
+        return _gemm_kernel(
+            df, id_col, vec_col, label_col, round_digits, schema, select
+        )
+    return finish(_pair_join(df, id_col, vec_col, label_col, round_digits, cond))
+
+
+def _select_top_k(k: int):
+    """GEMM-arm selection for the top-k operators. Per query row the
+    masked columns — the query itself, or every same-label column
+    (self included) when the batch carries ``q_label`` — go to -inf,
+    then every column with ``cos >= kth-largest cos`` is kept (ties
+    INCLUDED so the id tiebreak is decided on the full tie group,
+    identical to the window's (cos desc, nid asc) order), sorted,
+    sliced to k."""
+    import numpy as np
+
+    def select(S, pdf, nids, labs):
+        qids = pdf["qid"].to_numpy()
+        qlabs = pdf["q_label"].to_numpy() if labs is not None else None
+        qi, nj, rank = [], [], []
+        for i in range(len(pdf)):
+            masked = nids == qids[i] if labs is None else labs == qlabs[i]
+            kk = min(k, len(nids) - int(masked.sum()))
+            if kk <= 0:
+                continue
+            row = np.where(masked, -np.inf, S[i])
+            kth = np.partition(row, -kk)[-kk]
+            cand = np.nonzero(row >= kth)[0]
+            # (cos desc, nid asc): lexsort's LAST key is primary
+            order = cand[np.lexsort((nids[cand], -row[cand]))][:kk]
+            qi.extend([i] * len(order))
+            nj.extend(order)
+            rank.extend(range(1, len(order) + 1))
+        qi = np.asarray(qi, dtype=np.int64)
+        nj = np.asarray(nj, dtype=np.int64)
+        out = {"qid": qids[qi]}
+        if labs is not None:
+            out["q_label"] = qlabs[qi]
+        out["nid"] = nids[nj]
+        if labs is not None:
+            out["n_label"] = labs[nj]
+        out["cos_sim"] = S[qi, nj]
+        out["rank"] = np.asarray(rank, dtype=np.int64)
+        return out
+
+    return select
+
+
+def _rank_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Pair-join-arm finisher for the top-k operators."""
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("nid"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def cosine_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 5,
+    round_digits: int = 6,
+    broadcast_bytes: int = 512 * 1024 * 1024,
+) -> DataFrame:
+    """Exact all-pairs cosine top-k neighbors per vector (self excluded).
+    Ties broken by neighbor id for determinism.
+
+    The physical arm is chosen by the byte budget (same logical result,
+    pinned equal in tests):
+
+    * the corpus fits ``broadcast_bytes`` (default 512 MB: ``rows x dim
+      x 8`` must fit driver + executor memory) — the broadcast-GEMM
+      kernel selects the tie-aware top-k INSIDE each Arrow batch, so
+      only N x k rows ever exist as rows;
+    * it does not (``broadcast_bytes=0`` forces this) — crossJoin + JVM
+      fold dot + window rank. It materializes N^2 score ROWS and
+      shuffles them through the per-qid window: the sort, not the
+      arithmetic, dominates.
+
+    Past the budget the honest scale path is IVF (``operators/ivf.py``)
+    or sign-LSH — the brute-force N^2 itself is what stops scaling, not
+    the broadcast.
+
+    Contract: rows with NULL ids, NULL vectors, or zero-norm vectors
+    are EXCLUDED (no cosine is defined for them; 0/0-NaN ordering is
+    the one place the two arms could diverge).
+    """
+    return _exact_cosine(
+        _scoreable(df, id_col, vec_col), id_col, vec_col, None,
+        round_digits, broadcast_bytes,
+        schema="qid {id}, nid {id}, cos_sim double, rank long",
+        select=_select_top_k(k),
+        cond=F.col("qid") != F.col("nid"),
+        finish=lambda pairs: _rank_top_k(pairs, k),
+    )
+
+
+def neardup_pairs(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float = 0.9,
+    round_digits: int = 6,
+    broadcast_bytes: int = 512 * 1024 * 1024,
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (id1 < id2, cos >= t).
+
+    Same two arms, byte budget and NULL/zero-norm exclusion contract as
+    :func:`cosine_topk`. In the GEMM arm each unordered pair is emitted
+    by its SMALLER id so nothing duplicates, and only the >= t
+    survivors ever exist as rows."""
+    import numpy as np
+
+    def select(S, pdf, nids, labs):
+        qids = pdf["qid"].to_numpy()
+        qi, nj = np.nonzero((S >= threshold) & (nids[None, :] > qids[:, None]))
+        order = np.lexsort((nids[nj], qi))
+        qi, nj = qi[order], nj[order]
+        return {"id1": qids[qi], "id2": nids[nj], "cos_sim": S[qi, nj]}
+
+    return _exact_cosine(
+        _scoreable(df, id_col, vec_col), id_col, vec_col, None,
+        round_digits, broadcast_bytes,
+        schema="id1 {id}, id2 {id}, cos_sim double",
+        select=select,
+        cond=F.col("qid") < F.col("nid"),
+        finish=lambda pairs: pairs.filter(F.col("cos_sim") >= threshold).select(
+            F.col("qid").alias("id1"), F.col("nid").alias("id2"), "cos_sim"
+        ),
+    )
 
 
 def _hyperplane(dim: int, plane: int, seed: int = 42) -> list[float]:
@@ -400,7 +379,7 @@ def _lsh_signatures_matmul(
     sf0.1, ~30% of the whole query — while the batched GEMM is
     milliseconds and each row's bits are computed independently of
     batch composition (deterministic across partitionings). Same
-    documented-exception class as :func:`_cosine_topk_matmul`: Arrow
+    documented-exception class as :func:`_gemm_kernel`: Arrow
     batches, never per-row Python."""
     import numpy as np
     import pandas as pd
@@ -880,8 +859,6 @@ def hard_negative_topk(
     label_col: str,
     k: int = 3,
     round_digits: int = 6,
-    strategy: str = "auto",
-    broadcast_rows: int = 2_000_000,
     broadcast_bytes: int = 512 * 1024 * 1024,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every vector,
@@ -890,18 +867,16 @@ def hard_negative_topk(
     negatives are trivially separable; the informative ones sit just
     across the class boundary). Ties break by neighbor id.
 
-    Same two physical strategies as :func:`cosine_topk`, same logical
-    result (pinned equal in tests): ``"matmul"`` broadcasts the
-    (byte-budgeted) corpus and masks SAME-label columns per query row
-    inside the per-batch GEMM — only N x k rows ever exist, no pair
-    join in the plan at all; ``"pairs"`` is the label-inequality
-    self-join + window fallback, which plans a broadcast
-    nested-loop PAIR EXPLOSION and is therefore for bounded corpora /
-    per-shard use only (it is deliberately NOT the registered-query
-    arm — the plan gate's zero-pair-join rule). Past the broadcast
-    budget, mine within ANN candidates (IVF/sign-LSH top-m, then the
-    different-label filter + re-rank) and validate against this exact
-    operator.
+    Same two arms and byte budget as :func:`cosine_topk`, same logical
+    result (pinned equal in tests): the GEMM arm masks SAME-label
+    columns per query row inside the per-batch GEMM — only N x k rows
+    ever exist, no pair join in the plan at all; past the budget the
+    label-inequality self-join + window plans a broadcast nested-loop
+    PAIR EXPLOSION and is therefore for bounded corpora / per-shard use
+    only (it is deliberately NOT the registered query's plan — the plan
+    gate's zero-pair-join rule). Past the broadcast budget, mine within
+    ANN candidates (IVF/sign-LSH top-m, then the different-label filter
+    + re-rank) and validate against this exact operator.
 
     NULL ids/vectors/labels and zero-norm vectors are excluded by the
     similarity contract. Output: (qid, q_label, nid, n_label, cos_sim,
@@ -909,146 +884,14 @@ def hard_negative_topk(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if strategy not in ("auto", "pairs", "matmul"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    base = _scoreable(df, id_col, vec_col).filter(
-        F.col(label_col).isNotNull()
+    return _exact_cosine(
+        _scoreable(df, id_col, vec_col).filter(F.col(label_col).isNotNull()),
+        id_col, vec_col, label_col, round_digits, broadcast_bytes,
+        schema=(
+            "qid {id}, q_label {label}, nid {id}, n_label {label}, "
+            "cos_sim double, rank long"
+        ),
+        select=_select_top_k(k),
+        cond=F.col("q_label") != F.col("n_label"),
+        finish=lambda pairs: _rank_top_k(pairs, k),
     )
-    if strategy != "pairs":
-        fits, cap = _matmul_corpus_fits(
-            base, vec_col, broadcast_rows, broadcast_bytes
-        )
-        if fits:
-            return _hard_negative_matmul(
-                base, id_col, vec_col, label_col, k, round_digits
-            )
-        if strategy == "matmul":
-            raise ValueError(
-                f"corpus exceeds the matmul broadcast budget (row cap "
-                f"{cap}); use strategy='pairs' on a bounded slice or "
-                "mine within ANN candidates"
-            )
-    return _hard_negative_pairs(
-        base, id_col, vec_col, label_col, k, round_digits
-    )
-
-
-def _hard_negative_pairs(
-    base: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    k: int,
-    round_digits: int,
-) -> DataFrame:
-    from pyspark.sql import Window
-
-    q = base.select(
-        F.col(id_col).alias("qid"),
-        F.col(label_col).alias("q_label"),
-        _as_double(vec_col).alias("__qv"),
-    ).withColumn("__qn", norm(F.col("__qv")))
-    other = q.select(
-        F.col("qid").alias("nid"),
-        F.col("q_label").alias("n_label"),
-        F.col("__qv").alias("__nv"),
-        F.col("__qn").alias("__nn"),
-    )
-    pairs = q.join(other, F.col("q_label") != F.col("n_label")).select(
-        "qid",
-        "q_label",
-        "nid",
-        "n_label",
-        F.round(
-            dot(F.col("__qv"), F.col("__nv"))
-            / (F.col("__qn") * F.col("__nn")),
-            round_digits,
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("nid")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _hard_negative_matmul(
-    base: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    k: int,
-    round_digits: int,
-) -> DataFrame:
-    """Label-masked block-matmul arm: per Arrow batch one GEMM against
-    the broadcast corpus, SAME-label columns (and self) masked to -inf
-    per query row, tie-aware top-k exactly like _cosine_topk_matmul."""
-    import numpy as np
-    import pandas as pd
-
-    corpus = base.select(
-        F.col(id_col), F.col(label_col), _as_double(vec_col)
-    ).collect()
-    nid_arr = np.asarray([r[0] for r in corpus])
-    lab_arr = np.asarray([r[1] for r in corpus])
-    X = np.asarray([r[2] for r in corpus], dtype=np.float64)
-    xnorm = np.sqrt((X * X).sum(axis=1))
-    sc = base.sparkSession.sparkContext
-    b = sc.broadcast((nid_arr, lab_arr, X, xnorm))
-
-    id_type = base.schema[id_col].dataType.simpleString()
-    lab_type = base.schema[label_col].dataType.simpleString()
-    out_schema = (
-        f"qid {id_type}, q_label {lab_type}, nid {id_type}, "
-        f"n_label {lab_type}, cos_sim double, rank long"
-    )
-
-    def score_block(batches):
-        nids, labs, M, mnorm = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["qvec"]]
-            )
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            S = np.round((Q @ M.T) / np.outer(qn, mnorm), round_digits)
-            qids = pdf["qid"].to_numpy()
-            qlabs = pdf["qlab"].to_numpy()
-            oq, oql, on, onl, oc, orr = [], [], [], [], [], []
-            for i in range(len(pdf)):
-                row = S[i].copy()
-                mask = labs == qlabs[i]
-                row[mask] = -np.inf
-                avail = int((~mask).sum())
-                kk = min(k, avail)
-                if kk == 0:
-                    continue
-                kth = np.partition(row, -kk)[-kk]
-                cand = np.nonzero(row >= kth)[0]
-                order = cand[np.lexsort((nids[cand], -row[cand]))][:kk]
-                oq.extend([qids[i]] * len(order))
-                oql.extend([qlabs[i]] * len(order))
-                on.extend(nids[order])
-                onl.extend(labs[order])
-                oc.extend(row[order])
-                orr.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {
-                    "qid": oq,
-                    "q_label": oql,
-                    "nid": on,
-                    "n_label": onl,
-                    "cos_sim": oc,
-                    "rank": orr,
-                }
-            )
-
-    queries = ensure_parallelism(base).select(
-        F.col(id_col).alias("qid"),
-        F.col(label_col).alias("qlab"),
-        _as_double(vec_col).alias("qvec"),
-    )
-    return queries.mapInPandas(score_block, schema=out_schema)

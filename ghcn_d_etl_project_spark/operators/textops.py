@@ -36,16 +36,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """BPE-ish token estimate: count of word/number/punctuation chunks
-    produced by a GPT-2-style pre-tokenizer regex (letters runs, digit
-    runs, single punctuation). An upper-bound token estimator that needs
-    no vocabulary."""
-    c = F.col(col) if isinstance(col, str) else col
-    pieces = F.split(c, r"(?<=\W)|(?=\W)")
-    return F.size(F.filter(pieces, lambda x: F.trim(x) != "")).cast("long")
-
-
 def char_shingles(col: Column | str, n: int = 4, lowercase: bool = True) -> Column:
     """Distinct character n-grams as array<string> — pure Catalyst
     (sequence + transform + substring), no UDF, no explode needed until

@@ -183,11 +183,11 @@ QUALIFY rank <= 5
 @register("cosine_topk", oracle=_COSINE_TOPK_ORACLE, tags=("llm", "similarity"),
           bench=True, late=True)  # r12 rotation: 7-round green, demoted
 def cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact cosine top-5 neighbors per embedding. The auto
-    strategy picks the block-matmul arm (corpus broadcast as a dense
+    """Brute-force exact cosine top-5 neighbors per embedding. The byte
+    budget picks the broadcast-GEMM arm (corpus broadcast as a dense
     matrix, one BLAS GEMM + tie-aware top-k select per Arrow batch of
     queries — N x k output rows, zero N^2 row materialization); the
-    crossJoin + JVM-fold + window form remains as strategy='pairs',
+    crossJoin + JVM-fold + window form is the arm past the budget,
     pinned exactly equal in tests. The exact baseline the ANN paths are
     measured against."""
     return cosine_topk(t(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=5)
@@ -3801,10 +3801,10 @@ def hard_negatives_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 most cosine-similar OTHER-label neighbors — the negatives
     that actually move a contrastive loss (random negatives,
     `negative_sample_docs`, are trivially separable; the informative
-    ones sit just across the class boundary). Exact pairs arm as the
+    ones sit just across the class boundary). The exact operator is the
     oracle-carrying anchor; at 100 TB mine within ANN candidates
     (IVF/sign-LSH top-m, then the different-label filter + re-rank) and
-    validate against this, the cosine_topk matmul/pairs relationship."""
+    validate against this, as the ANN paths are against cosine_topk."""
     from ghcn_d_etl_project_spark.operators.similarity import (
         hard_negative_topk,
     )

@@ -24,19 +24,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def nanos_to_ts(col_name: str) -> Column:
     """Convert a nanosecond-epoch LONG column to a timestamp (micro
@@ -122,13 +109,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", nanos_to_ts("ts"))
     return normalize_temporal(df)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """Load several tables as a dict; lazy (no action is triggered)."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 @dataclass(frozen=True)

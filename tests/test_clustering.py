@@ -635,3 +635,57 @@ def test_kmeans_prereduce_path_bit_identical(spark):
         )
     )
     assert direct == prereduced
+
+
+def test_kmeans_prereduce_gate_counts_arrow_batches(spark):
+    """The pre-reduce gate counts Arrow BATCHES, not partitions: the
+    numpy partial sums are <= k rows per batch, so ONE partition of 60
+    rows in batches of 10 can send k x 6 rows to the driver. With k=2
+    and ``max_collect_rows=5`` the pre-reduce must engage — its shuffle
+    adds stages to the run's job group — and match the direct path."""
+    rng = random.Random(11)
+    rows = _blobs(rng, [(0.0, 0.0), (1.0, 1.0)], 30)
+    sc = spark.sparkContext
+    # an RDD source has UNKNOWN partitioning, so the pre-reduce's
+    # groupBy must shuffle even over one partition (a SinglePartition
+    # source would satisfy the grouping with no exchange at all)
+    df = spark.createDataFrame(
+        sc.parallelize(rows, 1), "id long, vec array<double>"
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+
+    def run(group, max_collect_rows):
+        held = []
+        sc.setJobGroup(group, "k-means pre-reduce gate")
+        try:
+            out = sorted(
+                map(
+                    tuple,
+                    kmeans_lloyd(
+                        df, "id", "vec", k=2, iters=2, release_into=held,
+                        max_collect_rows=max_collect_rows,
+                    ).collect(),
+                )
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            for h in held:
+                h.unpersist()
+        st = sc.statusTracker()
+        stages = {
+            s
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+        }
+        return out, len(stages)
+
+    spark.conf.set(conf, "10")
+    try:
+        gated, gated_stages = run("kmeans_gate_batches", 5)
+        direct, direct_stages = run("kmeans_gate_direct", 10**9)
+    finally:
+        spark.conf.set(conf, old)
+    assert gated == direct and len(gated) == 60
+    assert gated_stages > direct_stages, (gated_stages, direct_stages)

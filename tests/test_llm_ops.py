@@ -527,18 +527,18 @@ def test_bm25_plan_no_explode_no_join_no_python(spark):
 
 
 def test_cosine_topk_matmul_equals_pairs(spark):
-    """The block-matmul arm must reproduce the crossJoin+window arm
-    EXACTLY (same rows, same rounded scores, same tie-broken ranks) —
-    this is the pin that lets the benched query switch physical
-    strategy without touching the oracle."""
+    """The broadcast-GEMM arm (default budget) must reproduce the
+    crossJoin+window arm (``broadcast_bytes=0``) EXACTLY (same rows,
+    same rounded scores, same tie-broken ranks) — this is the pin that
+    lets the byte budget switch the physical arm without touching the
+    oracle."""
     emb = t(spark, SF_DIR, "embeddings")
     p = sorted(
         map(tuple, cosine_topk(emb, "vec_id", "embedding", k=5,
-                               strategy="pairs").collect())
+                               broadcast_bytes=0).collect())
     )
     m = sorted(
-        map(tuple, cosine_topk(emb, "vec_id", "embedding", k=5,
-                               strategy="matmul").collect())
+        map(tuple, cosine_topk(emb, "vec_id", "embedding", k=5).collect())
     )
     assert p == m
     assert len(p) > 0
@@ -556,46 +556,49 @@ def test_cosine_topk_matmul_tie_break_by_id(spark):
         (5, [0.0, 1.0]),   # orthogonal: cos 0
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = cosine_topk(df, "vec_id", "embedding", k=2, strategy="matmul")
-    got = {(r.qid, r.rank): r.nid for r in out.collect()}
-    # query 10: both colinear neighbors tie at cos 1.0 -> id 3 then id 7
-    assert got[(10, 1)] == 3 and got[(10, 2)] == 7
-    # strategy must raise on oversized corpus rather than silently collect
-    with pytest.raises(ValueError):
-        cosine_topk(df, "vec_id", "embedding", k=2,
-                    strategy="matmul", broadcast_rows=2).count()
+    for budget in (512 * 1024 * 1024, 0):  # GEMM arm, then pair join
+        out = cosine_topk(df, "vec_id", "embedding", k=2,
+                          broadcast_bytes=budget)
+        got = {(r.qid, r.rank): r.nid for r in out.collect()}
+        # query 10: both colinear neighbors tie at cos 1.0 -> id 3 then 7
+        assert got[(10, 1)] == 3 and got[(10, 2)] == 7, budget
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cosine_matmul_bounded_by_bytes_not_rows(spark):
-    """The r8 matmul gate was row-based (2M default) — at 1024-dim
-    float64 that is ~16 GB of driver heap, far past safety. The gate is
-    now BYTES-first: a tiny-row/high-dim corpus that passes the row cap
-    must still refuse the matmul collect when rows x dim x 8 exceeds
-    broadcast_bytes, and 'auto' must degrade to the pairs arm with the
-    identical result rather than collect."""
+    """The budget is BYTES, rows x dim x 8 against ``broadcast_bytes``
+    (a row cap reads safe at 2M rows yet is ~16 GB of driver heap at
+    1024-dim): a tiny-row/high-dim corpus over the byte budget must take
+    the pair join — no GEMM map in either operator's plan — with the
+    identical result, and within budget the GEMM arm engages."""
     dim = 64
     rows = [(i, [float((i * 7 + j) % 13) + 1.0 for j in range(dim)])
             for i in range(6)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     budget = 3 * dim * 8  # fits only 3 of the 6 vectors
-    with pytest.raises(ValueError, match="broadcast budget"):
-        cosine_topk(df, "vec_id", "embedding", k=2, strategy="matmul",
-                    broadcast_bytes=budget).count()
-    with pytest.raises(ValueError, match="broadcast budget"):
-        neardup_pairs(df, "vec_id", "embedding", threshold=0.5,
-                      strategy="matmul", broadcast_bytes=budget).count()
-    # auto: byte-overflow falls back to the pairs arm, same logical result
-    via_auto = sorted(map(tuple, cosine_topk(
-        df, "vec_id", "embedding", k=2, strategy="auto",
-        broadcast_bytes=budget).collect()))
+    over = cosine_topk(df, "vec_id", "embedding", k=2, broadcast_bytes=budget)
+    assert "MapInPandas" not in _plan_text(over)
+    nd_over = neardup_pairs(df, "vec_id", "embedding", threshold=0.5,
+                            broadcast_bytes=budget)
+    assert "MapInPandas" not in _plan_text(nd_over)
     via_pairs = sorted(map(tuple, cosine_topk(
-        df, "vec_id", "embedding", k=2, strategy="pairs").collect()))
-    assert via_auto == via_pairs and len(via_auto) == 12
-    # within budget: matmul still engages and matches
-    via_mm = sorted(map(tuple, cosine_topk(
-        df, "vec_id", "embedding", k=2, strategy="matmul",
-        broadcast_bytes=6 * dim * 8).collect()))
-    assert via_mm == via_pairs
+        df, "vec_id", "embedding", k=2, broadcast_bytes=0).collect()))
+    assert sorted(map(tuple, over.collect())) == via_pairs
+    assert len(via_pairs) == 12
+    # within budget: the GEMM arm engages and matches
+    fits = cosine_topk(df, "vec_id", "embedding", k=2,
+                       broadcast_bytes=6 * dim * 8)
+    assert "MapInPandas" in _plan_text(fits)
+    assert sorted(map(tuple, fits.collect())) == via_pairs
+    nd_fits = neardup_pairs(df, "vec_id", "embedding", threshold=0.5,
+                            broadcast_bytes=6 * dim * 8)
+    assert "MapInPandas" in _plan_text(nd_fits)
+    assert sorted(map(tuple, nd_fits.collect())) == sorted(
+        map(tuple, nd_over.collect())
+    )
 
 
 def test_charlm_gibberish_scores_below_corpus_text(spark):
@@ -655,10 +658,10 @@ def test_neardup_matmul_equals_pairs(spark):
 
     emb = t(spark, SF_DIR, "embeddings")
     p = sorted(map(tuple, neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.4, strategy="pairs"
+        emb, "vec_id", "embedding", threshold=0.4, broadcast_bytes=0
     ).collect()))
     m = sorted(map(tuple, neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.4, strategy="matmul"
+        emb, "vec_id", "embedding", threshold=0.4
     ).collect()))
     assert p == m
     assert len(p) > 0
@@ -666,10 +669,12 @@ def test_neardup_matmul_equals_pairs(spark):
 
 def test_similarity_null_and_zero_norm_contract(spark):
     """NULL and zero-norm vectors are excluded by contract under BOTH
-    strategies (0/0 is NaN, whose ordering numpy/JVM/SQL disagree on —
-    the one place the strategies could diverge)."""
+    arms (0/0 is NaN, whose ordering numpy/JVM/SQL disagree on — the
+    one place the arms could diverge). An input with nothing scoreable
+    left gives zero rows from every exact operator."""
     from ghcn_d_etl_project_spark.operators.similarity import (
         cosine_topk,
+        hard_negative_topk,
         neardup_pairs,
     )
 
@@ -681,16 +686,24 @@ def test_similarity_null_and_zero_norm_contract(spark):
         (5, [0.0, 1.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    for strat in ("pairs", "matmul"):
-        out = cosine_topk(df, "vec_id", "embedding", k=9, strategy=strat)
+    for budget in (0, 512 * 1024 * 1024):  # pair join, then GEMM arm
+        out = cosine_topk(df, "vec_id", "embedding", k=9,
+                          broadcast_bytes=budget)
         got = out.collect()
-        assert {r.qid for r in got} == {1, 2, 5}, (strat, got)
-        assert all(r.nid not in (3, 4) for r in got), strat
+        assert {r.qid for r in got} == {1, 2, 5}, (budget, got)
+        assert all(r.nid not in (3, 4) for r in got), budget
         nd = neardup_pairs(
-            df, "vec_id", "embedding", threshold=-1.0, strategy=strat
+            df, "vec_id", "embedding", threshold=-1.0, broadcast_bytes=budget
         ).collect()
         ids = {r.id1 for r in nd} | {r.id2 for r in nd}
-        assert ids == {1, 2, 5}, (strat, nd)
+        assert ids == {1, 2, 5}, (budget, nd)
+    unscoreable = df.filter("vec_id in (3, 4)")
+    assert cosine_topk(unscoreable, "vec_id", "embedding").count() == 0
+    assert neardup_pairs(unscoreable, "vec_id", "embedding").count() == 0
+    labelled = unscoreable.withColumn("label", F.lit(1))
+    assert hard_negative_topk(
+        labelled, "vec_id", "embedding", "label"
+    ).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -1471,8 +1484,7 @@ def test_hard_negative_matmul_equals_pairs(spark):
         map(
             tuple,
             hard_negative_topk(
-                emb, "vec_id", "embedding", "label", k=3,
-                strategy="matmul",
+                emb, "vec_id", "embedding", "label", k=3
             ).collect(),
         )
     )
@@ -1480,7 +1492,7 @@ def test_hard_negative_matmul_equals_pairs(spark):
         map(
             tuple,
             hard_negative_topk(
-                emb, "vec_id", "embedding", "label", k=3, strategy="pairs"
+                emb, "vec_id", "embedding", "label", k=3, broadcast_bytes=0
             ).collect(),
         )
     )

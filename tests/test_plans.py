@@ -8,12 +8,16 @@ plan fails CI, not production.
 
 from __future__ import annotations
 
+import json
 import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from ghcn_d_etl_project_spark.plans import all_queries
 from tests.conftest import SF_DIR, SF_DIR_ORACLE
+
+PLANS = Path(__file__).resolve().parents[1] / "PLANS.json"
 
 
 def _plan(spark, name: str) -> str:
@@ -66,14 +70,17 @@ def test_aggregates_are_partial_then_final(spark):
     assert "partial_" in plan
 
 
-def test_hot_path_queries_are_udf_free(spark):
-    """No Python-UDF eval nodes in any non-multimodal query plan."""
+def test_hot_path_queries_are_udf_free():
+    """No Python-UDF eval nodes (BatchEvalPython / ArrowEvalPython) in
+    any non-multimodal query plan. Read from the committed PLANS.json
+    report, whose ``python_evals`` counts exactly those nodes; the live
+    plans are pinned equal to it by test_no_unexplained_plan_drift."""
+    committed = json.loads(PLANS.read_text())["queries"]
     for name, q in all_queries().items():
         if "multimodal" in q.tags:
             continue
-        plan = _plan(spark, name)
-        assert "BatchEvalPython" not in plan, f"{name} contains a Python UDF"
-        assert "ArrowEvalPython" not in plan, f"{name} contains a pandas UDF"
+        evals = committed[name]["report"]["python_evals"]
+        assert evals == 0, f"{name} contains {evals} Python/pandas UDF node(s)"
 
 
 def test_asof_join_single_shuffle_no_explosion(spark):
@@ -99,11 +106,12 @@ def test_lsh_joins_never_cartesian(spark):
 
 
 def test_exact_similarity_plans_matmul_not_cartesian(spark):
-    """cosine_topk's auto strategy must pick the block-matmul arm at
+    """cosine_topk's byte budget must pick the broadcast-GEMM arm at
     bench/test corpus sizes: the N^2 never materializes as rows, so the
     plan carries the Arrow map (MapInPandas / mapInArrow lowering), NOT
-    a cross join + window sort. The pairs fallback (strategy='pairs')
-    remains the one construction allowed to plan a cross product."""
+    a cross join + window sort. The pair join, taken only past the
+    budget (or at ``broadcast_bytes=0``), remains the one construction
+    allowed to plan a cross product."""
     plan = _plan(spark, "cosine_topk")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
